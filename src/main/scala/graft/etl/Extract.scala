@@ -1,14 +1,16 @@
 package graft.etl
 
-import java.io.{File, FileInputStream}
+import java.io.{ByteArrayInputStream, File}
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path}
 import java.util.zip.ZipInputStream
 import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
+import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.storage.StorageLevel
 
 /** One simulation run's parsed metadata (reference metadata.json,
   * generate_synthetic_idaice.py:167-175).
@@ -22,92 +24,75 @@ final case class RunMetadata(
     description: String,
     generated_at: String)
 
-/** One extracted run: metadata + the four time-series tables
-  * (reference "run dict", extract/__init__.py:86-93).
-  */
-final case class RunData(
-    runId: String,
-    metadata: RunMetadata,
-    zones: DataFrame,
-    hvac: DataFrame,
-    meters: DataFrame,
-    weather: DataFrame)
-
-/** ZIP-bundle extraction (SURVEY §2.1 S1-S6).
+/** ZIP-bundle extraction (SURVEY §2.1 S1-S6), one path for a directory
+  * ([[extractRuns]]) and for a single keyed bundle ([[extractRunById]]).
   *
-  * Two paths:
-  *   - [[extractSimulationData]] / [[extractRuns]]: fidelity path — per-run
-  *     driver-side unzip to a staging dir, then schema-enforced
-  *     `spark.read.csv`. Matches the reference's semantics including layout
-  *     validation and the <50% failure tolerance.
-  *   - [[extractRunsDistributed]]: scale path — `binaryFile` source reads all
-  *     ZIPs on executors, members are decompressed in `flatMap`, lines parsed
-  *     with `from_csv`. No driver bottleneck: 100k run bundles become one
-  *     distributed scan. This is the 100 TB ingest shape.
+  * The `binaryFile` source reads every `run_*.zip` on executors; a flatMap
+  * unzips each bundle and checks its layout ([[validateLayout]]), emitting
+  * its five members as text rows, or ONE error row for a bad bundle, never
+  * an exception that kills the job. The decompressed members are persisted
+  * and one verdict pass over them returns a row per bundle: its layout
+  * error, the CSV members with malformed lines (a PERMISSIVE `from_csv`),
+  * and its metadata.json text, which the driver parses. The driver applies
+  * the reference's <50% failure tolerance to the verdicts and builds the
+  * member tables from the surviving bundles only. The job count does not
+  * grow with the bundle count: 100k run bundles are one distributed scan.
   */
 object Extract {
+
+  /** The surviving bundles of one ingest. `metadata` is in zip-file-name
+    * order; `tables` holds one DataFrame per member kind (`zones`, `hvac`,
+    * `meters`, `weather`, `metadata`), each with a `run_id` column (the
+    * bundle's root directory) and an `__ord` column (its zip file name: the
+    * reference's sorted-listing order). The tables read one persisted
+    * decompression pass: call `release()` once every consumer has
+    * materialized its own caches or writes.
+    */
+  final case class Extracted(metadata: Seq[RunMetadata],
+      tables: Map[String, DataFrame], private val members: DataFrame) {
+    def release(): Unit = { members.unpersist(); () }
+  }
 
   /** Required members of a run bundle under its single root directory
     * (reference: extract/__init__.py:49-63).
     */
-  /** Staged run dirs, removed recursively at JVM exit. (deleteOnExit on a
-    * non-empty directory silently fails — the staged CSV copies would leak;
-    * the CSVs must live until exit because Spark reads them lazily.)
-    */
-  private val stagingDirs = java.util.Collections.synchronizedList(
-    new java.util.ArrayList[Path]())
-  private lazy val cleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      stagingDirs.forEach { dir =>
-        Try {
-          val walk = Files.walk(dir)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => Files.deleteIfExists(p))
-          finally walk.close()
-        }
-        ()
-      }))
-  private def registerStagingCleanup(dir: Path): Unit = {
-    cleanupHook
-    stagingDirs.add(dir)
-    ()
-  }
-
   private val requiredMembers: Set[String] =
     Schemas.requiredCsvMembers.keySet + "metadata.json"
 
-  private def readZipMembers(zipFile: File): Map[String, Array[Byte]] = {
+  private def unzip(bundle: String, bytes: Array[Byte]): Map[String, Array[Byte]] = {
     val out = mutable.Map[String, Array[Byte]]()
-    val zin = new ZipInputStream(new FileInputStream(zipFile))
+    val zin = new ZipInputStream(new ByteArrayInputStream(bytes))
     try {
       var e = zin.getNextEntry
       while (e != null) {
         if (!e.isDirectory) out(e.getName) = zin.readAllBytes()
         e = zin.getNextEntry
       }
+    } catch {
+      case NonFatal(_) => throw new IllegalArgumentException(s"not a valid zip archive: $bundle")
     } finally zin.close()
     out.toMap
   }
 
   /** Validates the bundle layout: every member under one root dir, all five
     * required files present (reference: extract/__init__.py:44-63).
-    * Returns (rootDir, memberBaseName → bytes).
+    * Returns (rootDir, required member base name → bytes).
     */
-  private def validateLayout(zipFile: File,
+  private def validateLayout(bundle: String,
       members: Map[String, Array[Byte]]): (String, Map[String, Array[Byte]]) = {
     if (members.isEmpty)
-      throw new IllegalArgumentException(s"empty archive: $zipFile")
+      throw new IllegalArgumentException(s"empty archive: $bundle")
     val roots = members.keys.map(_.split("/", 2)(0)).toSet
     if (roots.size != 1)
       throw new IllegalArgumentException(
-        s"expected a single root directory in $zipFile, found: ${roots.mkString(", ")}")
+        s"expected a single root directory in $bundle, found: ${roots.toSeq.sorted.mkString(", ")}")
     val root = roots.head
     val byBase = members.map { case (k, v) => k.stripPrefix(s"$root/") -> v }
     val missing = requiredMembers -- byBase.keySet
     if (missing.nonEmpty)
       throw new IllegalArgumentException(
-        s"missing required members in $zipFile: ${missing.toSeq.sorted.mkString(", ")}")
-    (root, byBase)
+        s"missing required members in $bundle: ${missing.toSeq.sorted.mkString(", ")}")
+    (root, byBase.filter { case (k, _) => requiredMembers(k) })
   }
 
   private[etl] def parseMetadata(bytes: Array[Byte]): RunMetadata = {
@@ -136,174 +121,141 @@ object Extract {
       generated_at = if (node.has("generated_at")) node.get("generated_at").asText() else "")
   }
 
-  /** Extracts one run archive: unzip to a temp staging dir, validate layout,
-    * read the four CSVs with declared schemas (timestamp columns land as
-    * TimestampType directly — reference S6 normalization is free here).
+  /** Directory ingest of `run_*.zip`, tolerating up to 50% failed bundles
+    * (reference: extract/__init__.py:96-137).
     */
-  def extractSimulationData(spark: SparkSession, zipPath: String): RunData = {
-    val f = new File(zipPath)
-    if (!f.exists()) throw new java.io.FileNotFoundException(zipPath)
-    val members = Try(readZipMembers(f)) match {
-      case Success(m) => m
-      case Failure(_) => throw new IllegalArgumentException(s"not a valid zip archive: $zipPath")
-    }
-    val (root, byBase) = validateLayout(f, members)
-    val staging: Path = Files.createTempDirectory("graft_run_")
-    registerStagingCleanup(staging)
-    // stage only the five members we read — a bundle may carry extra nested
-    // files (logs/ etc.) whose parent dirs don't exist in the staging root
-    byBase.view.filterKeys(requiredMembers).foreach { case (name, bytes) =>
-      Files.write(staging.resolve(name), bytes)
-    }
-    def csv(name: String): DataFrame = {
-      val df = spark.read
-        .option("header", "true")
-        // FAILFAST: the declared schemas say nullable=false; PERMISSIVE
-        // would silently null a malformed cell in a column Catalyst is told
-        // is non-null.
-        .option("mode", "FAILFAST")
-        .schema(Schemas.requiredCsvMembers(name))
-        .csv(staging.resolve(name).toString)
-      // FAILFAST alone is lazy — the parse error would detonate at the first
-      // downstream ACTION, killing the whole pipeline. One eager FULL-WIDTH
-      // pass here (foreach, NOT count — count prunes every column and parses
-      // nothing) makes a corrupt file fail its RUN, which extractRuns' 50%
-      // tolerance absorbs — the reference's (eager pandas) failure unit.
-      // Driver-staged fidelity path only; the distributed path has no
-      // per-run tolerance to preserve.
-      df.foreach(_ => ())
-      df
-    }
-    RunData(
-      runId = root,
-      metadata = parseMetadata(byBase("metadata.json")),
-      zones = csv("zones.csv"),
-      hvac = csv("hvac.csv"),
-      meters = csv("meters.csv"),
-      weather = csv("weather.csv"))
-  }
-
-  /** Directory ingest of `run_*.zip` (sorted for determinism), tolerating
-    * up to 50% per-file failures (reference: extract/__init__.py:96-137).
-    */
-  def extractRuns(spark: SparkSession, simulationsDir: String): Seq[RunData] = {
-    val dir = new File(simulationsDir)
-    if (!dir.isDirectory)
+  def extractRuns(spark: SparkSession, simulationsDir: String): Extracted = {
+    if (!new File(simulationsDir).isDirectory)
       throw new java.io.FileNotFoundException(s"not a directory: $simulationsDir")
-    val zips = Option(dir.listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("run_") && f.getName.endsWith(".zip"))
-      .sortBy(_.getName)
-    if (zips.isEmpty)
-      throw new IllegalArgumentException(s"no run_*.zip archives in $simulationsDir")
-    val results = zips.map(z => z.getName -> Try(extractSimulationData(spark, z.getPath)))
-    val failures = results.collect { case (n, Failure(e)) => s"$n: ${e.getMessage}" }
-    if (failures.length * 2 >= results.length)
-      throw new RuntimeException(
-        s"too many extraction failures (${failures.length}/${results.length}): " +
-          failures.mkString("; "))
-    failures.foreach(f => System.err.println(s"[extract] skipping failed run $f"))
-    results.collect { case (_, Success(r)) => r }.toSeq
+    ingest(spark, simulationsDir) { (n, failures) =>
+      if (n == 0)
+        throw new IllegalArgumentException(s"no run_*.zip archives in $simulationsDir")
+      if (failures.length * 2 >= n)
+        throw new RuntimeException(
+          s"too many extraction failures (${failures.length}/$n): " + failures.mkString("; "))
+      failures.foreach(f => System.err.println(s"[extract] skipping failed run $f"))
+    }
   }
 
   /** Keyed single-run lookup: `run_{building}_{scenario}.zip`
-    * (reference: extract/__init__.py:140-161).
+    * (reference: extract/__init__.py:140-161). A bad bundle raises its own
+    * error as an IllegalArgumentException.
     */
   def extractRunById(spark: SparkSession, simulationsDir: String,
-      buildingId: String, scenarioId: String): RunData =
-    extractSimulationData(spark,
-      new File(simulationsDir, s"run_${buildingId}_${scenarioId}.zip").getPath)
-
-  /** Scale-path ingest: every `run_*.zip` is read as a binary blob on
-    * executors, unzipped in a flatMap, and its CSV lines parsed with
-    * `from_csv` against the declared schema. Returns one DataFrame per
-    * member kind, each with a `run_id` column. The driver never touches
-    * file contents — ingest parallelism is the file count.
-    */
-  def extractRunsDistributed(spark: SparkSession,
-      simulationsDir: String): Map[String, DataFrame] =
-    memberTables(spark, membersDistributed(spark, simulationsDir))
-
-  /** [[extractRunsDistributed]] with the decompression pass PERSISTED: the
-    * 5 member tables all derive from one (run_id, member, text) DataFrame,
-    * so without a cache every downstream materialization (9 star tables,
-    * validation, load) re-lists and re-unzips the whole corpus. Returns the
-    * tables plus a release handle the caller MUST invoke once its own
-    * caches/writes are materialized (the Pipeline does) — the persist is
-    * never left pinned behind a lazy plan.
-    */
-  def extractRunsDistributedCached(spark: SparkSession,
-      simulationsDir: String): (Map[String, DataFrame], () => Unit) = {
-    val members = membersDistributed(spark, simulationsDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (memberTables(spark, members), () => { members.unpersist(); () })
+      buildingId: String, scenarioId: String): Extracted = {
+    val zip = new File(simulationsDir, s"run_${buildingId}_${scenarioId}.zip")
+    if (!zip.exists()) throw new java.io.FileNotFoundException(zip.getPath)
+    ingest(spark, zip.getPath) { (_, failures) =>
+      failures.headOption.foreach(f => throw new IllegalArgumentException(f))
+    }
   }
 
-  private def membersDistributed(spark: SparkSession,
-      simulationsDir: String): DataFrame = {
+  /** Reads the bundles under `path`, judges each in one verdict pass, lets
+    * `tolerate(bundleCount, failures)` accept or reject the failures, and
+    * returns the surviving bundles.
+    */
+  private def ingest(spark: SparkSession, path: String)(
+      tolerate: (Int, Seq[String]) => Unit): Extracted = {
     import spark.implicits._
-    val bin = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "run_*.zip")
-      .load(simulationsDir)
-      .select($"path", $"content")
-
-    // (run root, member base name, member text) — with the SAME layout
-    // validation the fidelity path applies (validateLayout): every member
-    // under exactly one root directory. Without it, a root-level member's
-    // filename becomes a garbage run_id and a multi-root ZIP silently
-    // splits one bundle into several runs.
-    bin.as[(String, Array[Byte])].flatMap { case (path, bytes) =>
-      val zin = new ZipInputStream(new java.io.ByteArrayInputStream(bytes))
-      val out = mutable.Buffer[(String, String, String)]()
-      var e = zin.getNextEntry
-      while (e != null) {
-        if (!e.isDirectory) {
-          val parts = e.getName.split("/", 2)
-          if (parts.length < 2)
-            throw new IllegalArgumentException(
-              s"$path: member '${e.getName}' is not under a run directory")
-          out += ((parts(0), parts(1), new String(zin.readAllBytes(), StandardCharsets.UTF_8)))
-        }
-        e = zin.getNextEntry
-      }
-      val roots = out.map(_._1).distinct
-      if (roots.size != 1)
-        throw new IllegalArgumentException(
-          s"$path: expected a single root directory, found ${roots.size}")
-      out
-    }.toDF("run_id", "member", "text")
+    val members = readMembers(spark, path)
+    val judged = try {
+      val all = verdicts(members).sortBy(_.getString(0)).map(r => r.getString(0) -> judge(r))
+      tolerate(all.length, all.collect { case (b, Left(e)) => s"$b: $e" }.toSeq)
+      all
+    } catch { case NonFatal(e) => members.unpersist(); throw e }
+    val good = judged.collect { case (b, Right((runId, m))) => (b, runId, m) }.toSeq
+    val failed = judged.collect { case (b, Left(_)) => b }.toSeq
+    val metadata = good.toDF("__ord", "run_id", "m").select($"run_id", $"m.*", $"__ord")
+    Extracted(good.map(_._3),
+      csvTables(spark, members.where(!$"bundle".isin(failed: _*))) + ("metadata" -> metadata),
+      members)
   }
 
-  private def memberTables(spark: SparkSession,
-      members: DataFrame): Map[String, DataFrame] = {
+  /** (bundle, run_id, member, text, error), persisted: the five required
+    * members of each good bundle, or one row with the error of a bad one.
+    * `bundle` is the zip file name.
+    */
+  private def readMembers(spark: SparkSession, path: String): DataFrame = {
+    import spark.implicits._
+    spark.read.format("binaryFile")
+      .option("pathGlobFilter", "run_*.zip")
+      .load(path)
+      .select($"path", $"content")
+      .as[(String, Array[Byte])]
+      .flatMap { case (p, bytes) =>
+        val bundle = p.substring(p.lastIndexOf('/') + 1)
+        Try(validateLayout(bundle, unzip(bundle, bytes))) match {
+          case Success((root, byBase)) => byBase.toSeq.map { case (m, b) =>
+            (bundle, root, m, new String(b, StandardCharsets.UTF_8), null: String) }
+          case Failure(e) => Seq((bundle, null: String, null: String, null: String, e.getMessage))
+        }
+      }
+      .toDF("bundle", "run_id", "member", "text", "error")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  private def isData(line: Column): Column =
+    length(trim(line)) > 0 && !line.startsWith("timestamp") // not blank, not the header
+
+  /** One row per bundle: (bundle, run_id, error, sorted names of the CSV
+    * members with a malformed line, metadata.json text). Malformed means
+    * what FAILFAST would throw on: PERMISSIVE fills the corrupt-record
+    * column for exactly those lines.
+    */
+  private def verdicts(members: DataFrame): Array[Row] = {
+    val corrupt = "_corrupt_record"
+    val malformed = Schemas.requiredCsvMembers.toSeq.map { case (name, schema) =>
+      when(col("member") === name,
+        exists(split(col("text"), "\r?\n"), l => isData(l) &&
+          from_csv(l, schema.add(corrupt, StringType),
+            Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> corrupt))
+            .getField(corrupt).isNotNull))
+    }
+    members.groupBy(col("bundle"))
+      .agg(max(col("run_id")), max(col("error")),
+        sort_array(collect_list(when(coalesce(malformed: _*), col("member")))),
+        max(when(col("member") === "metadata.json", col("text"))))
+      .collect()
+  }
+
+  /** A verdict row's outcome: the failure message, or (run_id, metadata). */
+  private def judge(r: Row): Either[String, (String, RunMetadata)] = {
+    val malformed = r.getSeq[String](3)
+    if (r.getString(2) != null) Left(r.getString(2))
+    else if (malformed.nonEmpty) Left(s"malformed CSV lines in ${malformed.mkString(", ")}")
+    else Try(parseMetadata(r.getString(4).getBytes(StandardCharsets.UTF_8))) match {
+      case Success(m) => Right(r.getString(1) -> m)
+      case Failure(e) => Left(e.getMessage)
+    }
+  }
+
+  /** The four CSV members of `members` parsed with `from_csv` against the
+    * declared schemas.
+    */
+  private def csvTables(spark: SparkSession, members: DataFrame): Map[String, DataFrame] = {
     import spark.implicits._
     Schemas.requiredCsvMembers.map { case (name, schema) =>
       val lines = members
         .where($"member" === name)
         // arrayBarrier: stops InferFiltersFromGenerate from re-splitting the
         // whole file text inside a pushed-down per-row filter
-        .select($"run_id",
+        .select($"run_id", $"bundle".as("__ord"),
           explode(graft.functions.TextFunctions.arrayBarrier(
             split($"text", "\r?\n"))).as("line"))
-        .where(length(trim($"line")) > 0)
-        .where(!$"line".startsWith("timestamp")) // drop the header row
-      // FAILFAST to match the driver path: PERMISSIVE would silently null a
-      // malformed cell in a column the schema declares non-null
-      val table = lines.select($"run_id",
+        .where(isData($"line"))
+      // FAILFAST is an assertion here: the verdict pass already dropped
+      // every bundle with a malformed line, and PERMISSIVE would silently
+      // null a cell in a column the schema declares non-null
+      val table = lines.select($"run_id", $"__ord",
         from_csv($"line", schema, Map("mode" -> "FAILFAST")).as("r"))
-        .select(($"run_id" +: schema.fieldNames.map(f => col(s"r.$f"))): _*)
+        .select(($"run_id" +: $"__ord" +: schema.fieldNames.toIndexedSeq.map(f => col(s"r.$f"))): _*)
       name.stripSuffix(".csv") -> table
-    } + ("metadata" -> {
-      val metaSchema = Schemas.metadataJson
-      members.where($"member" === "metadata.json")
-        .select($"run_id", from_json($"text", metaSchema).as("m"))
-        .select(($"run_id" +: metaSchema.fieldNames.map(f => col(s"m.$f"))): _*)
-    })
+    }
   }
 
   /** PERMISSIVE CSV reader with a quarantine lane — the production
-    * complement to the FAILFAST readers above. FAILFAST is right when a
-    * corrupt file should fail its RUN (the <50% run-tolerance contract);
+    * complement to the bundle reader above. Failing the bundle is right when
+    * a corrupt file should fail its RUN (the <50% run-tolerance contract);
     * at fleet scale a single mangled row must NOT kill a 100 TB job — it
     * routes to quarantine with its raw text intact for triage, and the
     * clean rows flow on. Returns (good, quarantined): `good` carries the

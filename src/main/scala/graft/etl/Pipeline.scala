@@ -19,8 +19,7 @@ object Pipeline {
       outputDir: String = "",
       skipValidation: Boolean = false,
       force: Boolean = false,
-      exportJson: Boolean = true,
-      distributed: Boolean = false)
+      exportJson: Boolean = true)
 
   def parseArgs(args: Array[String]): Config = {
     def loop(cfg: Config, rest: List[String]): Config = rest match {
@@ -29,7 +28,6 @@ object Pipeline {
       case "--skip-validation" :: t => loop(cfg.copy(skipValidation = true), t)
       case "--force" :: t => loop(cfg.copy(force = true), t)
       case "--no-export" :: t => loop(cfg.copy(exportJson = false), t)
-      case "--distributed" :: t => loop(cfg.copy(distributed = true), t)
       case Nil => cfg
       case x :: _ => throw new IllegalArgumentException(s"unknown argument: $x")
     }
@@ -42,25 +40,13 @@ object Pipeline {
   /** Runs the pipeline; returns the process exit code. */
   def run(spark: SparkSession, cfg: Config): Int = {
     // [1/4] extract
-    var releaseMembers: () => Unit = () => ()
-    val built =
-      if (cfg.distributed) {
-        // cached variant: ONE decompression pass feeds all 9 star-table
-        // caches instead of re-unzipping the corpus per table
-        val (members, release) =
-          Extract.extractRunsDistributedCached(spark, cfg.simulationsDir)
-        releaseMembers = release
-        Transform.transformAllDistributed(spark, members)
-      } else {
-        val runs = Extract.extractRuns(spark, cfg.simulationsDir)
-        println(s"[pipeline] extracted ${runs.length} runs")
-        // [2/4] transform
-        Transform.transformAll(spark, runs)
-      }
-    // validate issues ~20 counting actions and load+export re-consume every
-    // table: cache the star schema once instead of re-deriving the whole
-    // extract→transform DAG per action (the reference holds it in memory)
-    val schema = built.view.mapValues(_.cache()).toMap
+    val extracted = Extract.extractRuns(spark, cfg.simulationsDir)
+    println(s"[pipeline] extracted ${extracted.metadata.length} runs")
+    // [2/4] transform. Validate issues ~20 counting actions and load+export
+    // re-consume every table: cache the star schema once instead of
+    // re-deriving the whole extract→transform DAG per action (the reference
+    // holds it in memory)
+    val schema = Transform.transformAll(spark, extracted.tables).view.mapValues(_.cache()).toMap
     try {
 
       // [3/4] validate (skippable, reference run_pipeline.py:95-125)
@@ -92,7 +78,7 @@ object Pipeline {
       0
     } finally {
       schema.values.foreach(_.unpersist())
-      releaseMembers()
+      extracted.release()
     }
   }
 

@@ -7,9 +7,9 @@ import org.apache.spark.sql.expressions.Window
 /** Star-schema construction (SURVEY §2.2-§2.7; reference
   * src/etl/transform/__init__.py:13-445), re-planned for Spark:
   *
-  *   - per-run frames are unioned FIRST, then dims join once — the reference
-  *     loops runs and joins per run (an O(runs) driver loop); here the union
-  *     is a single lazy plan and each dim join is one broadcast hash join;
+  *   - every run's rows arrive as one table per member kind, so dims join
+  *     once — the reference loops runs and joins per run (an O(runs) driver
+  *     loop); here each dim join is one broadcast hash join;
   *   - surrogate keys come from `row_number` over an explicit orderBy — a
   *     deliberate single-partition window, acceptable because it only ever
   *     runs on the *distinct key domain* (zones, AHUs, timestamps), which is
@@ -18,55 +18,32 @@ import org.apache.spark.sql.expressions.Window
   *     guard, transform/__init__.py:269-274) and emits SQL NULL, not NaN;
   *   - dow uses the pandas convention Mon=0 (Spark dayofweek is Sun=1 →
   *     (dayofweek+5)%7), is_weekend = dow >= 5;
-  *   - weather is building-independent: taken once (the reference's manual
-  *     common-subexpression decision, transform/__init__.py:373-382) and
-  *     fanned out per building with a crossJoin.
+  *   - weather is building-independent: taken from the first run only (the
+  *     reference's manual common-subexpression decision,
+  *     transform/__init__.py:373-382) and fanned out per building with a
+  *     crossJoin.
   */
 object Transform {
 
-  /** Batch path over driver-extracted runs. Fact→dim joins are left joins
-    * (reference `how='left'`): unmatched fact rows survive with NULL keys —
-    * the Load views later apply inner semantics (the intentional asymmetry,
-    * SURVEY §4.2).
+  /** Builds the star schema from [[Extract.Extracted]] member tables with no
+    * driver loop. `__ord` (the zip file name) is the reference's first-seen
+    * file order. Fact→dim joins are left joins (reference `how='left'`):
+    * unmatched fact rows survive with NULL keys — the Load views later apply
+    * inner semantics (the intentional asymmetry, SURVEY §4.2).
     */
-  def transformAll(spark: SparkSession, runs: Seq[RunData]): Map[String, DataFrame] = {
-    require(runs.nonEmpty, "no runs to transform")
+  def transformAll(spark: SparkSession,
+      members: Map[String, DataFrame]): Map[String, DataFrame] = {
     import spark.implicits._
-    build(spark,
-      // __ord = position in the (sorted-zip) run list, so "first-seen" dedup
-      // below is the reference's file-order semantics, not partition luck
-      meta = runs.map(_.metadata).zipWithIndex.toDF("m", "__ord")
-        .select($"m.*", $"__ord"),
-      // zones carry __ord too: dim_zone's name dedup is first-seen BY RUN
-      // (reference keeps the first run's zone_name for a renamed zone)
-      zonesAll = runs.map(_.zones).zipWithIndex
-        .map { case (df, i) => df.withColumn("__ord", lit(i)) }
-        .reduce(_ unionByName _),
-      hvacAll = runs.map(_.hvac).reduce(_ unionByName _),
-      metersAll = runs.map(_.meters).reduce(_ unionByName _),
-      // weather identical across runs → read once (reference :373-382)
-      weatherOne = runs.head.weather)
-  }
-
-  /** Scale path over [[Extract.extractRunsDistributed]] output — identical
-    * star schema with no driver loop at all; weather dedups by timestamp
-    * since "first run" has no meaning in a distributed listing.
-    */
-  def transformAllDistributed(spark: SparkSession,
-      members: Map[String, DataFrame]): Map[String, DataFrame] =
-    build(spark,
-      // run_id is the deterministic "first-seen" order in a distributed
-      // listing (lexicographic = the driver path's sorted-zip order)
-      meta = members("metadata").withColumn("__ord", col("run_id")).drop("run_id"),
-      zonesAll = members("zones").withColumn("__ord", col("run_id")).drop("run_id"),
-      hvacAll = members("hvac").drop("run_id"),
-      metersAll = members("meters").drop("run_id"),
-      weatherOne = members("weather").drop("run_id").dropDuplicates("timestamp"))
-
-  private def build(spark: SparkSession, meta: DataFrame, zonesAll: DataFrame,
-      hvacAll: DataFrame, metersAll: DataFrame,
-      weatherOne: DataFrame): Map[String, DataFrame] = {
-    import spark.implicits._
+    val meta = members("metadata")
+    // zones carry __ord: dim_zone's name dedup is first-seen BY RUN
+    // (reference keeps the first run's zone_name for a renamed zone)
+    val zonesAll = members("zones")
+    val hvacAll = members("hvac")
+    val metersAll = members("meters")
+    // weather is identical across runs → the first run's only (reference
+    // reads runs[0]'s, :373-382)
+    val weather = members("weather")
+    val weatherOne = weather.where($"__ord" === weather.agg(min($"__ord")).scalar())
 
     // ---- dims from metadata (first-seen dedup per key; reference :29-41,
     // :61-71). min_by on the explicit __ord, NOT first(): Spark's first()

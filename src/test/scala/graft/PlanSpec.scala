@@ -235,7 +235,7 @@ class PlanSpec extends SparkSpec {
     val dir = graft.etl.SyntheticRuns.tempDir()
     graft.etl.SyntheticRuns.writeFixtureDir(dir)
     val schema = graft.etl.Transform.transformAll(spark,
-      graft.etl.Extract.extractRuns(spark, dir.toString))
+      graft.etl.Extract.extractRuns(spark, dir.toString).tables)
     for (d <- Seq("dim_zone", "dim_ahu", "dim_time"))
       assertGuarded(schema(d), d)
     assertGuarded(SparkEntry.queries("q_surrogate_rownum")(spark, sf),

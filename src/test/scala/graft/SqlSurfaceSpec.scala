@@ -171,7 +171,7 @@ class SqlSurfaceSpec extends SparkSpec {
     val dir = graft.etl.SyntheticRuns.tempDir()
     graft.etl.SyntheticRuns.writeFixtureDir(dir)
     val schema = graft.etl.Transform.transformAll(spark,
-      graft.etl.Extract.extractRuns(spark, dir.toString))
+      graft.etl.Extract.extractRuns(spark, dir.toString).tables)
     graft.etl.Load.registerAll(spark, schema)
     val out = spark.sql(
       "SELECT building_id, total_electric_kwh FROM vw_energy_summary").collect()

@@ -145,9 +145,10 @@ class DailyJobSpec extends SparkSpec {
       indexedDocs: Option[DataFrame], crashBeforeRollup: Boolean,
       indexDir: Option[String] = None): DataFrame = {
     // step 1: ingest
-    val runs = Extract.extractRuns(spark, arrivalDir.toString)
-    val zonesRaw = runs.map(_.zones).reduce(_ unionByName _)
-    val metersRaw = runs.map(_.meters).reduce(_ unionByName _)
+    val runs = Extract.extractRuns(spark, arrivalDir.toString).tables
+    // the bundle columns are ingest bookkeeping, not warehouse columns
+    val zonesRaw = runs("zones").drop("run_id", "__ord")
+    val metersRaw = runs("meters").drop("run_id", "__ord")
     // step 2: observe — metrics ride the validation pass
     val (zonesObs, obs) = Observe.instrument(zonesRaw, s"ingest-${arrivalDir.getFileName}",
       "rows" -> count(lit(1)),
@@ -157,12 +158,12 @@ class DailyJobSpec extends SparkSpec {
     // asserts a contiguous hourly grid, so a late-arriving correction
     // batch validates as its own window (mixing vintages in one report
     // would flag the inter-batch calendar gap, not a data defect)
-    runs.groupBy(r =>
-      r.zones.agg(min(col("timestamp"))).head().getTimestamp(0).toInstant
-        .toString.take(7))
+    runs("zones").groupBy("run_id").agg(min(col("timestamp"))).collect()
+      .groupBy(_.getTimestamp(1).toInstant.toString.take(7))
       .foreach { case (window, grp) =>
-        val report = Validate.validateAll(spark,
-          Transform.transformAll(spark, grp))
+        val ids = grp.map(_.getString(0)).toSeq
+        val report = Validate.validateAll(spark, Transform.transformAll(spark,
+          runs.view.mapValues(_.where(col("run_id").isin(ids: _*))).toMap))
         assert(report.isValid,
           s"window $window failed validation: ${report.render}")
       }

@@ -9,7 +9,7 @@ class LoadExportSpec extends SparkSpec {
   private lazy val schema: Map[String, org.apache.spark.sql.DataFrame] = {
     val dir = SyntheticRuns.tempDir()
     SyntheticRuns.writeFixtureDir(dir)
-    Transform.transformAll(spark, Extract.extractRuns(spark, dir.toString))
+    Transform.transformAll(spark, Extract.extractRuns(spark, dir.toString).tables)
   }
 
   test("parquet round-trip preserves row counts and schema") {

@@ -8,8 +8,7 @@ class TransformSpec extends SparkSpec {
   private lazy val schema: Map[String, org.apache.spark.sql.DataFrame] = {
     val dir = SyntheticRuns.tempDir()
     SyntheticRuns.writeFixtureDir(dir) // B1,B2 × BASE,ECO; 48h; 3 zones; 2 AHUs
-    val runs = Extract.extractRuns(spark, dir.toString)
-    Transform.transformAll(spark, runs)
+    Transform.transformAll(spark, Extract.extractRuns(spark, dir.toString).tables)
   }
 
   test("dims dedup across runs (2 buildings, 2 scenarios)") {
@@ -42,7 +41,7 @@ class TransformSpec extends SparkSpec {
     val dir = SyntheticRuns.tempDir()
     SyntheticRuns.writeRunZip(dir, SyntheticRuns.Spec("B1", "BASE", hours = 7 * 24))
     val week = Transform.transformAll(spark,
-      Extract.extractRuns(spark, dir.toString))("dim_time")
+      Extract.extractRuns(spark, dir.toString).tables)("dim_time")
     val sun = week.where(dayofweek($"timestamp") === 1).head()
     assert(sun.getInt(6) == 6 && sun.getBoolean(7)) // Sunday → dow 6, weekend
     val sat = week.where(dayofweek($"timestamp") === 7).head()
@@ -76,13 +75,19 @@ class TransformSpec extends SparkSpec {
     assert(ok.count() == 0)
   }
 
-  test("distributed transform produces the same star schema row counts") {
+  test("fact_weather is the first run's weather, fanned out per building") {
+    import spark.implicits._
     val dir = SyntheticRuns.tempDir()
-    SyntheticRuns.writeFixtureDir(dir)
-    val dist = Transform.transformAllDistributed(spark,
-      Extract.extractRunsDistributed(spark, dir.toString))
-    assert(dist("dim_building").count() == schema("dim_building").count())
-    assert(dist("fact_zone_conditions").count() == schema("fact_zone_conditions").count())
-    assert(dist("fact_weather").count() == schema("fact_weather").count())
+    // the 24 h run sorts first; its drybulb is a constant the 48 h run lacks
+    SyntheticRuns.writeRunZip(dir,
+      SyntheticRuns.Spec("B1", "BASE", hours = 24, corrupt = Map("drybulb_C" -> 7.5)))
+    SyntheticRuns.writeRunZip(dir, SyntheticRuns.Spec("B2", "BASE", hours = 48))
+    val star = Transform.transformAll(spark, Extract.extractRuns(spark, dir.toString).tables)
+    val weather = star("fact_weather")
+    assert(weather.count() == 24 * 2)
+    assert(weather.where($"drybulb_C" =!= 7.5).count() == 0)
+    assert(weather.select("building_id").distinct().count() == 2)
+    // dim_time still spans every source's timestamps
+    assert(star("dim_time").count() == 48)
   }
 }

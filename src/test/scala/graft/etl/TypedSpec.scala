@@ -11,7 +11,7 @@ class TypedSpec extends SparkSpec {
   private lazy val schema: Map[String, org.apache.spark.sql.DataFrame] = {
     val dir = SyntheticRuns.tempDir()
     SyntheticRuns.writeFixtureDir(dir)
-    Transform.transformAll(spark, Extract.extractRuns(spark, dir.toString))
+    Transform.transformAll(spark, Extract.extractRuns(spark, dir.toString).tables)
   }
 
   test("every star table lifts to its typed Dataset and collects") {

@@ -9,7 +9,7 @@ class ValidateSpec extends SparkSpec {
     val dir = SyntheticRuns.tempDir()
     SyntheticRuns.writeRunZip(dir,
       SyntheticRuns.Spec("B1", "BASE", hours = hours, corrupt = corrupt))
-    Transform.transformAll(spark, Extract.extractRuns(spark, dir.toString))
+    Transform.transformAll(spark, Extract.extractRuns(spark, dir.toString).tables)
   }
 
   test("clean data passes all four checks") {
